@@ -106,27 +106,37 @@ def column_class_for(decl: str, promoted: bool) -> str:
     return "dynamic"
 
 
-def _let(bindings: dict[str, Column], body) -> Column:
-    """Evaluate-once let-binding for column expressions.
-
-    Plain ``Column`` reuse in PySpark CLONES the whole subtree at
-    every reference site — a formatter that mentions an intermediate
-    eight times inflates the expression tree exponentially (the
-    pre-refactor :func:`_python_real_repr` generated >64 KB of Java
-    per column and janino refused to compile it). A higher-order
-    function's lambda variable, by contrast, is a genuine evaluated-
-    once reference, so ``transform(array(struct(<bindings>)), λ)[0]``
-    is the JVM-side equivalent of a ``let``: each binding computes
-    once per row, the body references it for free, and the tree stays
-    linear in the source size. Nested calls may capture outer lambda
-    variables (Spark resolves named lambda variables lexically)."""
-    s = F.struct(*[v.alias(k) for k, v in bindings.items()])
-    return F.transform(F.array(s), body)[0]
 
 
-def _python_real_repr(d: Column) -> Column:
-    """CPython/SQLite ``repr()`` of a double, as a pure JVM column
-    expression — Spark's ``cast(string)`` emits Java formatting
+# The formatters below are SQL expression text, written once and
+# instantiated per column by substituting the raw field's SQL text for
+# this placeholder: one F.expr parse per column instead of ~100 py4j
+# Column calls.
+_X = "__x__"
+
+
+def _let(bindings: dict[str, str], var: str, body: str) -> str:
+    """Evaluate-once let-binding, as SQL text.
+
+    Repeating an intermediate in an expression repeats its whole
+    subtree, so a formatter that mentions one eight times inflates
+    the tree exponentially (an earlier :func:`_python_real_repr`
+    generated >64 KB of Java per column and janino refused to compile
+    it). A higher-order function's lambda variable, by contrast, is a
+    genuine evaluated-once reference, so
+    ``transform(array(named_struct(<bindings>)), var -> body)[0]`` is
+    the JVM-side equivalent of a ``let``: each binding computes once
+    per row, ``body`` reads it as ``var.<name>`` for free, and the
+    tree stays linear in the source size. Nested lets may read outer
+    lambda variables (Spark resolves named lambda variables
+    lexically), so each level needs its own ``var``."""
+    fields = ", ".join(f"'{k}', {v}" for k, v in bindings.items())
+    return f"transform(array(named_struct({fields})), {var} -> {body})[0]"
+
+
+def _python_real_repr(d: str) -> str:
+    """CPython/SQLite ``repr()`` of the double SQL expression ``d``,
+    as SQL text — Spark's ``cast(string)`` emits Java formatting
     (``1.23456785E7``) where SQLite's shell and Python's sqlite3
     render CPython repr (``12345678.5``). Java 17's ``toString`` is
     also not always shortest-digits (pre-Ryū ``FloatingDecimal`` can
@@ -139,10 +149,11 @@ def _python_real_repr(d: Column) -> Column:
     in [-4, 15], scientific (``1.5e+16`` / ``9.9e-05``: bare
     mantissa, explicit sign, exponent ≥ 2 digits) outside.
 
-    Built on :func:`_let` so every intermediate (Java string, digit
-    run, decimal exponent) is computed once per row — the naive
-    all-``Column`` version duplicated subtrees exponentially and blew
-    the 64 KB JVM method limit.
+    Built on :func:`_let` (lambda variables ``r`` and ``q``) so every
+    intermediate (Java string, digit run, decimal exponent) is
+    computed once per row. Only the real branches of
+    :func:`apply_affinity` reach it, so the common integer and text
+    paths keep whole-stage codegen.
 
     Residual (documented; fuzz-measured ~0.01% of bit-random doubles,
     zero in realistic data): values whose shortest repr needs ≥ 16
@@ -153,133 +164,103 @@ def _python_real_repr(d: Column) -> Column:
     comparison/join/order semantic is unaffected; only the printed
     string can differ.
     """
+    n = "length(q.digits)"
+    expabs = "CAST(abs(q.exp) AS STRING)"
+    sci = (
+        "concat(substr(q.digits, 1, 1), "
+        f"CASE WHEN {n} > 1 THEN concat('.', substr(q.digits, 2, {n})) "
+        "ELSE '' END, 'e', CASE WHEN q.exp >= 0 THEN '+' ELSE '-' END, "
+        # zero-pad to ≥2 digits; lpad would TRUNCATE 3-digit exponents
+        f"CASE WHEN length({expabs}) < 2 THEN concat('0', {expabs}) "
+        f"ELSE {expabs} END)"
+    )
+    intlen = "(q.exp + 1)"
+    fixed_pos = (
+        f"CASE WHEN {n} > {intlen} THEN concat(substr(q.digits, 1, {intlen}),"
+        f" '.', substr(q.digits, {intlen} + 1, {n})) "
+        f"ELSE concat(q.digits, repeat('0', {intlen} - {n}), '.0') END"
+    )
+    fixed_neg = "concat('0.', repeat('0', -q.exp - 1), q.digits)"
+    fmt = (
+        "concat(CASE WHEN q.neg THEN '-' ELSE '' END, "
+        "CASE WHEN q.fa = 0.0D THEN '0.0' "
+        "WHEN q.sa = 'Infinity' THEN 'inf' "
+        # Java fixed-point (1e-3 ≤ |d| < 1e7) == Python fixed-point
+        "WHEN NOT q.has_e THEN q.sa "
+        f"WHEN q.exp >= 16 OR q.exp <= -5 THEN {sci} "
+        f"WHEN q.exp >= 0 THEN {fixed_pos} "
+        f"ELSE {fixed_neg} END)"
+    )
 
-    def fmt(q: Column) -> Column:
-        digits, exp, sa = q["digits"], q["exp"], q["sa"]
-        n = F.length(digits)
-        expabs = F.abs(exp).cast("string")
-        sci = F.concat(
-            digits.substr(F.lit(1), F.lit(1)),
-            F.when(
-                n > 1, F.concat(F.lit("."), digits.substr(F.lit(2), n))
-            ).otherwise(F.lit("")),
-            F.lit("e"),
-            F.when(exp >= 0, F.lit("+")).otherwise(F.lit("-")),
-            # zero-pad to ≥2 digits; lpad would TRUNCATE 3-digit
-            # exponents
-            F.when(F.length(expabs) < 2, F.concat(F.lit("0"), expabs))
-            .otherwise(expabs),
-        )
-        intlen = exp + F.lit(1)
-        fixed_pos = F.when(
-            n > intlen,
-            F.concat(
-                digits.substr(F.lit(1), intlen),
-                F.lit("."),
-                digits.substr(intlen + 1, n),
-            ),
-        ).otherwise(
-            F.concat(
-                digits,
-                F.repeat(F.lit("0"), intlen - n),
-                F.lit(".0"),
-            )
-        )
-        fixed_neg = F.concat(
-            F.lit("0."), F.repeat(F.lit("0"), -exp - 1), digits
-        )
-        body = (
-            F.when(q["fa"] == 0.0, F.lit("0.0"))
-            .when(sa == "Infinity", F.lit("inf"))
-            # Java fixed-point (1e-3 ≤ |d| < 1e7) == Python fixed-point
-            .when(~q["has_e"], sa)
-            .when((exp >= 16) | (exp <= -5), sci)
-            .when(exp >= 0, fixed_pos)
-            .otherwise(fixed_neg)
-        )
-        return F.when(
-            q["neg"], F.concat(F.lit("-"), body)
-        ).otherwise(body)
-
-    def derive(r: Column) -> Column:
-        fa, sa = r["fa"], r["sa"]
-        # Tier 1: Java toString digits — shortest whenever ≤ 15 digits
-        # (FloatingDecimal's non-shortest bug class needs 16+), the
-        # overwhelmingly common case, and free to extract.
-        p0 = F.split(sa, "E")
-        d0s = F.regexp_replace(
-            F.regexp_replace(p0[0], r"\.", ""), r"0+$", ""
-        )
-        d0 = F.when(d0s == "", F.lit("0")).otherwise(d0s)
-        # Tier 2 (toString gave ≥ 16 digits): shortest of the
-        # 14..17-digit renderings that parses back — non-shortest
-        # toString can overshoot by a digit, so the search starts
-        # below it.
-        sel = None
-        for k in (13, 14, 15):
-            c = F.format_string(f"%.{k}e", fa)
-            cond = c.cast("double") == fa
-            sel = F.when(cond, c) if sel is None else sel.when(cond, c)
-        sel = sel.otherwise(F.format_string("%.16e", fa))
-        p1 = F.split(sel, "e")
-        d1s = F.regexp_replace(
-            F.regexp_replace(p1[0], r"\.", ""), r"0+$", ""
-        )
-        use0 = F.length(d0) <= 15
-        return _let(
-            {
-                "digits": F.when(use0, d0).otherwise(
-                    F.when(d1s == "", F.lit("0")).otherwise(d1s)
-                ),
-                # F.get, not [1]: bindings evaluate eagerly (struct
-                # fields), and fixed-point Java strings have no "E"
-                # part — [1] would throw under ANSI instead of NULLing
-                "exp": F.when(use0, F.get(p0, 1))
-                .otherwise(p1[1])
-                .cast("int"),
-                "sa": sa,
-                "has_e": F.size(p0) == 2,
-                "fa": fa,
-                "neg": r["neg"],
-            },
-            fmt,
-        )
-
+    # Tier 1: Java toString digits — shortest whenever ≤ 15 digits
+    # (FloatingDecimal's non-shortest bug class needs 16+), the
+    # overwhelmingly common case, and free to extract.
+    p0 = "split(r.sa, 'E')"
+    d0s = rf"regexp_replace(regexp_replace({p0}[0], r'\.', ''), r'0+$', '')"
+    d0 = f"CASE WHEN {d0s} = '' THEN '0' ELSE {d0s} END"
+    # Tier 2 (toString gave ≥ 16 digits): shortest of the 14..17-digit
+    # renderings that parses back — non-shortest toString can
+    # overshoot by a digit, so the search starts below it.
+    sel = "".join(
+        f"WHEN CAST(format_string('%.{k}e', r.fa) AS DOUBLE) = r.fa "
+        f"THEN format_string('%.{k}e', r.fa) "
+        for k in (13, 14, 15)
+    )
+    sel = f"CASE {sel}ELSE format_string('%.16e', r.fa) END"
+    p1 = f"split({sel}, 'e')"
+    d1s = rf"regexp_replace(regexp_replace({p1}[0], r'\.', ''), r'0+$', '')"
+    use0 = f"length({d0}) <= 15"
+    derive = _let(
+        {
+            "digits": f"CASE WHEN {use0} THEN {d0} "
+            f"ELSE CASE WHEN {d1s} = '' THEN '0' ELSE {d1s} END END",
+            # get(), not [1]: bindings evaluate eagerly (struct
+            # fields), and fixed-point Java strings have no "E" part —
+            # [1] would throw under ANSI instead of NULLing
+            "exp": f"CAST(CASE WHEN {use0} THEN get({p0}, 1) "
+            f"ELSE {p1}[1] END AS INT)",
+            "sa": "r.sa",
+            "has_e": f"size({p0}) = 2",
+            "fa": "r.fa",
+            "neg": "r.neg",
+        },
+        "q",
+        fmt,
+    )
     return _let(
         {
-            "fa": F.abs(d),
-            "sa": F.abs(d).cast("string"),
+            "fa": f"abs({d})",
+            "sa": f"CAST(abs({d}) AS STRING)",
             # sign probed from the Java string so -0.0 keeps its minus
-            "neg": d.cast("string").startswith("-"),
+            "neg": f"startswith(CAST({d} AS STRING), '-')",
         },
+        "r",
         derive,
     )
 
 
-def apply_affinity(col: Column, affinity: str) -> Column:
-    """Canonicalize a raw text field per its column affinity."""
-    affinity = normalize_affinity(affinity)
-    if affinity in ("text", "blob"):
-        return col
-
+def _formatters() -> dict[str, str]:
+    """The REAL and INTEGER/NUMERIC canonicalizers as SQL text over
+    the raw field ``_X``."""
     # SQLite's "looks like a number" check ignores surrounding ASCII
     # whitespace (' 2 ' under INTEGER affinity stores integer 2);
     # non-numeric text keeps its whitespace verbatim
-    t = F.regexp_replace(col, r"^\s+|\s+$", "")
-    is_int = t.rlike(INT_RE)
-    is_real = t.rlike(REAL_RE)
-    d = t.cast("double")
+    t = rf"regexp_replace({_X}, r'^\s+|\s+$', '')"
+    is_int = f"({t} RLIKE r'{INT_RE}')"
+    is_real = f"({t} RLIKE r'{REAL_RE}')"
+    d = f"CAST({t} AS DOUBLE)"
+    as_real = _python_real_repr(d)
 
-    if affinity == "real":
-        # fixed-point "N.0" for every integral double below 1e16 —
-        # the exact window where CPython/SQLite float repr stays
-        # fixed-point (repr(9007199254740992.0) = '9007199254740992.0'
-        # but repr(1e16) = '1e+16'); long-cast is exact there
-        integral = (d == F.floor(d)) & (F.abs(d) < 1e16)
-        real_str = F.when(
-            integral, F.concat(d.cast("long").cast("string"), F.lit(".0"))
-        ).otherwise(_python_real_repr(d))
-        return F.when(is_int | is_real, real_str).otherwise(col)
+    # fixed-point "N.0" for every integral double below 1e16 — the
+    # exact window where CPython/SQLite float repr stays fixed-point
+    # (repr(9007199254740992.0) = '9007199254740992.0' but
+    # repr(1e16) = '1e+16'); long-cast is exact there
+    real = (
+        f"CASE WHEN {is_int} OR {is_real} THEN "
+        f"CASE WHEN {d} = floor({d}) AND abs({d}) < 1e16 "
+        f"THEN concat(CAST(CAST({d} AS BIGINT) AS STRING), '.0') "
+        f"ELSE {as_real} END ELSE {_X} END"
+    )
 
     # integer / numeric: lossless-integral → integer form, else real.
     # SQLite's rule is a lossless ROUND-TRIP within int64 (not a 2^53
@@ -292,22 +273,29 @@ def apply_affinity(col: Column, affinity: str) -> Column:
     # double AS BIGINT) returns a CLAMPED int64max instead of NULL
     # (the overflow check compares against max-as-double, which IS
     # 2^63), and the clamped value would pass the round-trip test.
-    li = d.try_cast("long")  # NULL on overflow (except the ==2^63 quirk)
+    li = f"TRY_CAST({d} AS BIGINT)"  # NULL on overflow (except 2^63)
     integral = (
-        li.isNotNull()
-        & (li.cast("double") == d)
-        & (li > -9223372036854775808)
-        & (li < 9223372036854775807)
+        f"{li} IS NOT NULL AND CAST({li} AS DOUBLE) = {d} "
+        f"AND {li} > -9223372036854775808L AND {li} < 9223372036854775807L"
     )
-    long_form = t.try_cast("long").cast("string")
-    as_int = li.cast("string")
-    as_real = _python_real_repr(d)
-    return (
+    long_form = f"CAST(TRY_CAST({t} AS BIGINT) AS STRING)"
+    numeric = (
         # int-looking text that overflows int64 falls through to real,
         # matching SQLite's lossless-only integer conversion
-        F.when(is_int & long_form.isNotNull(), long_form)
-        .when(is_real & integral, as_int)
-        .when(is_real, as_real)
-        .when(is_int, as_real)
-        .otherwise(col)
+        f"CASE WHEN {is_int} AND {long_form} IS NOT NULL THEN {long_form} "
+        f"WHEN {is_real} AND {integral} THEN CAST({li} AS STRING) "
+        f"WHEN {is_real} OR {is_int} THEN {as_real} "
+        f"ELSE {_X} END"
     )
+    return {"real": real, "integer": numeric, "numeric": numeric}
+
+
+_FORMATTERS = _formatters()
+
+
+def apply_affinity(x: str, affinity: str) -> Column:
+    """Canonicalize a raw text field per its column affinity; ``x`` is
+    the field's SQL expression text (a column name, or e.g.
+    ``try_element_at(fields, 3)``)."""
+    text = _FORMATTERS.get(normalize_affinity(affinity))  # None: verbatim
+    return F.expr(text.replace(_X, x) if text else x)

@@ -254,7 +254,6 @@ def run(argv: list[str], out=None) -> int:
     for t in spark.catalog.listTables():
         if t.isTemporary and t.namespace == []:
             spark.catalog.dropTempView(t.name)
-    register_udfs(spark)
     # fresh storage-class catalog too: a resident session must not
     # classify this run's columns from a previous run's declarations
     from sqawk_spark.affinity import COLUMN_CLASSES
@@ -463,6 +462,10 @@ def _run_statement(spark, stmt: str, known_cols: set[str]):
     return _run_statement_with(spark, stmt, known_cols, dict(COLUMN_CLASSES))
 
 
+# a function call in SQL text: a name, optionally backquoted, then "("
+_CALL_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_]*)`?\s*\(")
+
+
 def _run_statement_with(
     spark, stmt: str, known_cols: set[str], classes: dict[str, str]
 ):
@@ -474,13 +477,22 @@ def _run_statement_with(
     and b loaded, ``SELECT "b1" FROM a`` is a string literal. Rather
     than re-implementing name resolution, let Spark's analyzer decide:
     on UNRESOLVED_COLUMN, drop that name from the candidate set and
-    re-plan, converging to exactly the columns visible in scope."""
+    re-plan, converging to exactly the columns visible in scope.
+
+    Every statement path (SELECT, DML, -dbfile, parquet output) runs
+    through here, so this is where the SQLite functions the rewritten
+    statement calls get registered."""
     from sqawk_spark.dialect import rewrite_statement
 
     cols = set(known_cols)
+    registered: set[str] = set()
     while True:
         try:
-            return spark.sql(rewrite_statement(stmt, cols, classes))
+            sql = rewrite_statement(stmt, cols, classes)
+            called = {m.lower() for m in _CALL_RE.findall(sql)} - registered
+            register_udfs(spark, called)
+            registered |= called
+            return spark.sql(sql)
         except Exception as e:  # AnalysisException; avoid hard import
             msg = str(e)
             if "UNRESOLVED_COLUMN" in msg:

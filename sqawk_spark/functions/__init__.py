@@ -13,13 +13,22 @@ path.
 
 from __future__ import annotations
 
+from collections.abc import Collection
+
 import pandas as pd  # module-scope: pandas_udf type hints resolve here
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 
-def register_udfs(spark: SparkSession) -> None:
+def register_udfs(
+    spark: SparkSession, names: Collection[str] | None = None
+) -> None:
+    """Register the SQLite functions named in ``names`` (lower case;
+    names this module does not define are ignored), or all of them
+    when ``names`` is None. Registration pickles each Python function
+    into the JVM, so the CLI registers per statement only what the
+    statement calls."""
     # NOTE: tokenize is defined inside this function ON PURPOSE, even
     # though sources/tcl.py has the same logic: a nested function is
     # pickled by value into the UDF closures, while an imported one is
@@ -651,19 +660,15 @@ def register_udfs(spark: SparkSession) -> None:
                 out.append("\x00")
         return "".join(out)
 
-    spark.udf.register("quote", quote_fn, T.StringType())
-    spark.udf.register("char", char_fn, T.StringType())
-    spark.udf.register("unicode", unicode_fn, T.IntegerType())
-    spark.udf.register("sqlite_version", sqlite_version, T.StringType())
-
-    # iif: SQL scalar function (CASE sugar). String-typed to match the
-    # engine's canonicalized-string storage model.
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION iif(c BOOLEAN, a STRING, b STRING)
-        RETURNS STRING RETURN CASE WHEN c THEN a ELSE b END
-        """
-    )
+    def iif(name: str) -> None:
+        # SQL scalar function (CASE sugar). String-typed to match the
+        # engine's canonicalized-string storage model.
+        spark.sql(
+            f"""
+            CREATE OR REPLACE TEMPORARY FUNCTION {name}(c BOOLEAN, a STRING, b STRING)
+            RETURNS STRING RETURN CASE WHEN c THEN a ELSE b END
+            """
+        )
 
     # SQLite aggregate names: total() (sum with 0.0 for empty/all-NULL)
     # and group_concat() — Arrow-batched grouped-agg UDFs. Caveat
@@ -673,7 +678,7 @@ def register_udfs(spark: SparkSession) -> None:
     # coalesce(sum(x),0.0) / concat_ws(',', collect_list(x)).
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
+    @pandas_udf(T.DoubleType())
     def total_agg(v: pd.Series) -> float:
         # SQLite numeric coercion, not a hard cast: text sums its
         # numeric PREFIX ('3abc' → 3.0) and counts 0.0 otherwise —
@@ -688,12 +693,12 @@ def register_udfs(spark: SparkSession) -> None:
         )
         return float(pd.to_numeric(ex, errors="coerce").fillna(0.0).sum())
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def group_concat_agg(v: pd.Series) -> str | None:
         vals = [str(x) for x in v.dropna()]
         return ",".join(vals) if vals else None
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def group_concat2_agg(v: pd.Series, sep: pd.Series) -> str | None:
         """group_concat(X, Y): SQLite emits Y from the CURRENT row as
         the separator preceding each value after the first. Reached via
@@ -712,7 +717,7 @@ def register_udfs(spark: SparkSession) -> None:
         "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
     )
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def group_concat_distinct_agg(v: pd.Series) -> str | None:
         """group_concat(DISTINCT X): SQLite dedups by value keeping
         the FIRST-arrival representative in scan order, ',' separator
@@ -727,7 +732,7 @@ def register_udfs(spark: SparkSession) -> None:
                 out.append(s)
         return ",".join(out) if out else None
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def group_concat_distinct_nocase_agg(v: pd.Series) -> str | None:
         """group_concat(DISTINCT X COLLATE NOCASE): dedup by SQLite's
         ASCII-only case fold, first-arrival representative rendered
@@ -742,42 +747,49 @@ def register_udfs(spark: SparkSession) -> None:
                 out.append(s)
         return ",".join(out) if out else None
 
-    spark.udf.register("total", total_agg)
-    spark.udf.register("group_concat", group_concat_agg)
-    spark.udf.register("group_concat2", group_concat2_agg)
-    spark.udf.register("group_concat_distinct", group_concat_distinct_agg)
-    spark.udf.register(
-        "group_concat_distinct_nocase", group_concat_distinct_nocase_agg
-    )
+    def udf(fn, return_type=None):
+        return lambda name: spark.udf.register(name, fn, return_type)
 
-    # CPython repr of a double — used by the dialect's sum() rendering
-    # for dynamic columns (the REAL branch of SQLite's per-group
-    # INTEGER/REAL sum type). Row-at-a-time is fine: it runs on
-    # group-level aggregate OUTPUTS, never on the scan.
-    spark.udf.register(
-        "py_real_repr",
-        lambda d: None if d is None else repr(float(d)),
-        T.StringType(),
-    )
-
-    spark.udf.register("typeof", typeof, T.StringType())
-    spark.udf.register("glob", glob, T.BooleanType())
-    spark.udf.register("sqlite_like", sqlite_like, T.BooleanType())
-    spark.udf.register("strftime", strftime, T.StringType())
-    spark.udf.register("date", date_fn, T.StringType())
-    spark.udf.register("time", time_fn, T.StringType())
-    spark.udf.register("datetime", datetime_fn, T.StringType())
-    spark.udf.register("julianday", julianday, T.DoubleType())
-    spark.udf.register("unixepoch", unixepoch_fn, T.LongType())
-    spark.udf.register("printf", sqlite_printf, T.StringType())
-    spark.udf.register("sqlite_substr2", sqlite_substr2, T.StringType())
-    spark.udf.register("sqlite_substr3", sqlite_substr3, T.StringType())
-    spark.udf.register("sqlite_round1", sqlite_round1, T.DoubleType())
-    spark.udf.register("sqlite_round2", sqlite_round2, T.DoubleType())
-    spark.udf.register("lindex", lindex, T.StringType())
-    spark.udf.register("llength", llength, T.IntegerType())
-    spark.udf.register("lrange", lrange, T.StringType())
-    spark.udf.register("regexp", regexp, T.BooleanType())
-    spark.udf.register("regsub", regsub, T.StringType())
-    spark.udf.register("dict_get", dict_get, T.StringType())
-    spark.udf.register("dict_exists", dict_exists, T.BooleanType())
+    registrations = {
+        "quote": udf(quote_fn, T.StringType()),
+        "char": udf(char_fn, T.StringType()),
+        "unicode": udf(unicode_fn, T.IntegerType()),
+        "sqlite_version": udf(sqlite_version, T.StringType()),
+        "iif": iif,
+        "total": udf(total_agg),
+        "group_concat": udf(group_concat_agg),
+        "group_concat2": udf(group_concat2_agg),
+        "group_concat_distinct": udf(group_concat_distinct_agg),
+        "group_concat_distinct_nocase": udf(group_concat_distinct_nocase_agg),
+        # CPython repr of a double — used by the dialect's sum()
+        # rendering for dynamic columns (the REAL branch of SQLite's
+        # per-group INTEGER/REAL sum type). Row-at-a-time is fine: it
+        # runs on group-level aggregate OUTPUTS, never on the scan.
+        "py_real_repr": udf(
+            lambda d: None if d is None else repr(float(d)), T.StringType()
+        ),
+        "typeof": udf(typeof, T.StringType()),
+        "glob": udf(glob, T.BooleanType()),
+        "sqlite_like": udf(sqlite_like, T.BooleanType()),
+        "strftime": udf(strftime, T.StringType()),
+        "date": udf(date_fn, T.StringType()),
+        "time": udf(time_fn, T.StringType()),
+        "datetime": udf(datetime_fn, T.StringType()),
+        "julianday": udf(julianday, T.DoubleType()),
+        "unixepoch": udf(unixepoch_fn, T.LongType()),
+        "printf": udf(sqlite_printf, T.StringType()),
+        "sqlite_substr2": udf(sqlite_substr2, T.StringType()),
+        "sqlite_substr3": udf(sqlite_substr3, T.StringType()),
+        "sqlite_round1": udf(sqlite_round1, T.DoubleType()),
+        "sqlite_round2": udf(sqlite_round2, T.DoubleType()),
+        "lindex": udf(lindex, T.StringType()),
+        "llength": udf(llength, T.IntegerType()),
+        "lrange": udf(lrange, T.StringType()),
+        "regexp": udf(regexp, T.BooleanType()),
+        "regsub": udf(regsub, T.StringType()),
+        "dict_get": udf(dict_get, T.StringType()),
+        "dict_exists": udf(dict_exists, T.BooleanType()),
+    }
+    for name, register in registrations.items():
+        if names is None or name in names:
+            register(name)

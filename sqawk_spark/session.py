@@ -9,10 +9,14 @@ chosen so the same logical plans scale to a multi-executor cluster:
   on a real cluster this is the *initial* number and AQE coalesces.
 - Arrow enabled: every Pandas-UDF hop is Arrow-batched, never per-row.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- A quiet stderr: no console progress bar, and the two loggers that
+  otherwise print before the CLI's compact ``error:`` line are raised
+  to a quieter level unless the user's logging configuration sets them.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -42,6 +46,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SQAWK_SPARK_DRIVER_MEM", "8g"))
     )
     if extra_conf:
@@ -49,4 +54,34 @@ def get_session(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _quiet_loggers(spark)
     return spark
+
+
+def _quiet_loggers(spark: SparkSession) -> None:
+    """Silence the two per-invocation stderr records users cannot act
+    on, leaving any level their own configuration gives them alone:
+
+    - log4j ``SimpleFunctionRegistry`` WARNs once per SQL function
+      registered over a built-in of the same name (``printf``,
+      ``typeof``, ``date`` …), which the SQLite function set does on
+      purpose;
+    - PySpark's ``SQLQueryContextLogger`` logs every analysis error as
+      a ~20 KB JSON record holding the whole plan, ahead of the
+      compact ``error:`` line the CLI prints for the same error.
+    """
+    jvm = spark.sparkContext._jvm
+    log4j = jvm.org.apache.logging.log4j
+    name = "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"
+    ctx = log4j.LogManager.getContext(False)
+    # a logger without its own entry in the log4j2 configuration
+    # inherits its parent's LoggerConfig
+    if ctx.getConfiguration().getLoggerConfig(name).getName() != name:
+        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
+
+    from pyspark.logger import PySparkLogger
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    # WARNING is the level every PySparkLogger is created with
+    if logger.level in (logging.NOTSET, logging.WARNING):
+        logger.setLevel(logging.CRITICAL)

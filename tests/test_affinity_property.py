@@ -87,7 +87,7 @@ def test_affinity_matches_sqlite(spark, decl, values):
     got = [
         r["y"]
         for r in df.select(
-            "i", apply_affinity(F.col("x"), decl).alias("y")
+            "i", apply_affinity("x", decl).alias("y")
         )
         .orderBy("i")
         .collect()
@@ -168,9 +168,9 @@ def _load_both(spark, values1, values2, decl1, decl2):
         )
         cls = column_class_for(decl or "blob", promoted)
         classes[name] = cls
-        raw = F.col(f"raw_{name}")
+        raw = f"raw_{name}"
         cols.append(
-            raw.try_cast("long").alias(name)
+            F.col(raw).try_cast("long").alias(name)
             if promoted
             else apply_affinity(raw, decl or "blob").alias(name)
         )
@@ -386,7 +386,7 @@ def test_python_real_repr_vs_cpython(spark):
     got = {
         r["i"]: r["s"]
         for r in df.select(
-            "i", _python_real_repr(F.col("d")).alias("s")
+            "i", F.expr(_python_real_repr("d")).alias("s")
         ).collect()
     }
     bad = [
@@ -423,7 +423,7 @@ def test_affinity_goldens_from_reference(spark):
     for (v, d), want in cases.items():
         got = (
             df.filter((F.col("x") == v) & (F.col("d") == d))
-            .select(apply_affinity(F.col("x"), d).alias("y"))
+            .select(apply_affinity("x", d).alias("y"))
             .first()["y"]
         )
         assert got == want, (v, d, got, want)

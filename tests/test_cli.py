@@ -10,10 +10,13 @@ it ports (tests.tcl line refs in comments).
 from __future__ import annotations
 
 import io
+import os
+import sqlite3
 
 import pytest
 
 import sqawk_spark.cli as cli
+from tests import sqlite_layout
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -88,43 +91,61 @@ def test_fs_empty_match_rejected(tmp_path):
 # --- join (tests.tcl:164-189, examples golden files) --------------------
 
 
+def _fixture(*parts: str) -> str:
+    return os.path.join(os.path.dirname(__file__), "fixtures", *parts)
+
+
+def _sqlite_golden(sql: str, tables: dict[str, list]) -> list[str]:
+    """sql's rows from stdlib sqlite3 with ``tables`` (name → records)
+    loaded in sqawk's table layout, rendered as the awk serializer
+    prints them."""
+    con = sqlite3.connect(":memory:")
+    for name, records in tables.items():
+        sqlite_layout.load(con, name, records)
+    return sqlite_layout.render(con.execute(sql).fetchall()).splitlines()
+
+
 def test_join_hp_examples():
-    # EXACT golden equality: ORDER BY b1 leaves ties unordered in SQL,
-    # but SQLite emits them in nested-loop scan order and the CLI pins
-    # that via trailing row-counter sort keys (append_scan_order).
-    golden = open("/root/reference/examples/hp/results.correct").read().rstrip("\n")
-    got = pysqawk(
+    # F3 (FIXTURES.md): MD5SUMS x du-bytes, same shape as the
+    # reference's examples/hp, with ties in b1 and unmatched names on
+    # both sides. EXACT equality: ORDER BY b1 leaves ties unordered in
+    # SQL, but SQLite emits them in nested-loop scan order and the CLI
+    # pins that via trailing row-counter sort keys (append_scan_order).
+    sql = (
         "select a1, b1, a2 from a inner join b on a2 = b2"
-        " where b1 < 10000 order by b1",
-        "/root/reference/examples/hp/MD5SUMS",
-        "/root/reference/examples/hp/du-bytes",
+        " where b1 < 10000 order by b1"
     )
-    assert got.splitlines() == [
-        l.rstrip() for l in golden.splitlines()
-    ]
+    md5, du = _fixture("hp", "MD5SUMS"), _fixture("hp", "du-bytes")
+    golden = _sqlite_golden(
+        sql,
+        {
+            "a": sqlite_layout.awk_records(open(md5).read()),
+            "b": sqlite_layout.awk_records(open(du).read()),
+        },
+    )
+    assert len(golden) > 5
+    assert pysqawk(sql, md5, du).splitlines() == golden
 
 
 def test_join_three_files():
-    golden = (
-        open("/root/reference/examples/three-files/results.correct")
-        .read()
-        .rstrip("\n")
-    )
-    d = "/root/reference/examples/three-files"
-    got = pysqawk(
-        "-FS",
-        ",",
+    # F4: three id,letter files; the second names FS twice and the
+    # later FS=, wins
+    sql = (
         "select a1, a2, b2, c2 from a inner join b on a1 = b1"
-        " inner join c on a1 = c1",
-        f"{d}/1",
-        "FS=_",
-        "FS=,",
-        f"{d}/2",
-        f"{d}/3",
+        " inner join c on a1 = c1"
     )
+    paths = [_fixture("three-files", n) for n in ("1", "2", "3")]
+    golden = _sqlite_golden(
+        sql,
+        {
+            t: sqlite_layout.awk_records(open(p).read(), ",")
+            for t, p in zip("abc", paths)
+        },
+    )
+    got = pysqawk("-FS", ",", sql, paths[0], "FS=_", "FS=,", *paths[1:])
     # EXACT golden equality: no ORDER BY, but the CLI pins SQLite's
     # nested-loop scan order (append_scan_order row-counter keys)
-    assert got.splitlines() == golden.splitlines()
+    assert got.splitlines() == golden
 
 
 # --- table= / prefix= (tests.tcl:191-223) -------------------------------
