@@ -280,6 +280,11 @@ def run(argv: list[str], out=None) -> int:
             records = PARSERS[spec.format](spark, spec, path)
             loader.add(records, spec, table)
         tables = loader.finalize()
+        # each loaded table's row counter: SQLite's scan order, which
+        # orders joins' output and group_concat
+        nr_by_table = {
+            t.lower(): f"{(s.prefix or t)}nr" for t, s in loader.specs.items()
+        }
 
         # -dbfile: parquet-backed persistence (the reference's on-disk
         # SQLite database, README.md:146-150). Loaded tables append to
@@ -302,7 +307,7 @@ def run(argv: list[str], out=None) -> int:
             # the driver (toLocalIterator); a big result belongs in
             # columnar files written by the executors instead
             return _run_parquet_output(
-                spark, serializer_spec, script, dbfile=opts["dbfile"]
+                spark, serializer_spec, script, nr_by_table, opts["dbfile"]
             )
         if serializer_spec.startswith("awk"):
             # OFS/ORS come from the global flags for the awk serializer
@@ -337,23 +342,17 @@ def run(argv: list[str], out=None) -> int:
             # a global sort would serialize the distributed write)
             from sqawk_spark.dialect import append_scan_order
 
-            nr_by_table = {
-                t.lower(): f"{(s.prefix or t)}nr"
-                for t, s in loader.specs.items()
-            }
+            def run_sql(sql):
+                return _run_statement(spark, sql, known_cols, nr_by_table)
+
             for stmt in split_statements(script):
                 # DML/DDL mutates the loaded views and emits no rows
                 # (SURVEY §2.B27; the reference feeds these to SQLite)
-                target = maybe_run_dml(
-                    spark,
-                    stmt,
-                    lambda sql: _run_statement(spark, sql, known_cols),
-                )
+                target = maybe_run_dml(spark, stmt, run_sql)
                 if target:
                     mutated.append(target)
                     continue
-                stmt = append_scan_order(stmt, nr_by_table)
-                df = _run_statement(spark, stmt, known_cols)
+                df = run_sql(append_scan_order(stmt, nr_by_table))
                 names = df.columns
                 for row in df.toLocalIterator():
                     ser.row(names, [render_value(v) for v in row])
@@ -402,7 +401,11 @@ def run(argv: list[str], out=None) -> int:
 
 
 def _run_parquet_output(
-    spark, serializer_spec: str, script: str, dbfile: str | None = None
+    spark,
+    serializer_spec: str,
+    script: str,
+    nr_by_table: dict[str, str],
+    dbfile: str | None = None,
 ) -> int:
     """``-output parquet,dir=D[,mode=overwrite][,partitionBy=c1+c2]``:
     each SELECT's result is written by the executors as parquet — no
@@ -430,17 +433,18 @@ def _run_parquet_output(
         if t.isTemporary
         for c in spark.table(t.name).columns
     }
-    stmts = split_statements(script)
+
+    def run_sql(sql):
+        return _run_statement(spark, sql, known_cols, nr_by_table)
+
     selects = []
     mutated: list[str] = []
-    for stmt in stmts:
-        t = maybe_run_dml(
-            spark, stmt, lambda sql: _run_statement(spark, sql, known_cols)
-        )
+    for stmt in split_statements(script):
+        t = maybe_run_dml(spark, stmt, run_sql)
         if t:
             mutated.append(t)
             continue
-        selects.append(_run_statement(spark, stmt, known_cols))
+        selects.append(run_sql(stmt))
     for i, df in enumerate(selects, start=1):
         dest = target if len(selects) == 1 else os.path.join(target, f"s{i}")
         writer = df.write.mode(mode)
@@ -454,12 +458,17 @@ def _run_parquet_output(
     return 0
 
 
-def _run_statement(spark, stmt: str, known_cols: set[str]):
-    """spark.sql with SQLite's per-statement double-quote resolution
-    and the load-time storage-class catalog (affinity semantics)."""
+def _run_statement(
+    spark, stmt: str, known_cols: set[str], nr_by_table: dict[str, str]
+):
+    """spark.sql with SQLite's per-statement double-quote resolution,
+    the load-time storage-class catalog (affinity semantics) and the
+    loaded tables' row counters (scan order)."""
     from sqawk_spark.affinity import COLUMN_CLASSES
 
-    return _run_statement_with(spark, stmt, known_cols, dict(COLUMN_CLASSES))
+    return _run_statement_with(
+        spark, stmt, known_cols, dict(COLUMN_CLASSES), nr_by_table
+    )
 
 
 # a function call in SQL text: a name, optionally backquoted, then "("
@@ -467,7 +476,11 @@ _CALL_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_]*)`?\s*\(")
 
 
 def _run_statement_with(
-    spark, stmt: str, known_cols: set[str], classes: dict[str, str]
+    spark,
+    stmt: str,
+    known_cols: set[str],
+    classes: dict[str, str],
+    nr_by_table: dict[str, str] | None = None,
 ):
     """spark.sql with SQLite's per-statement double-quote resolution.
 
@@ -488,7 +501,7 @@ def _run_statement_with(
     registered: set[str] = set()
     while True:
         try:
-            sql = rewrite_statement(stmt, cols, classes)
+            sql = rewrite_statement(stmt, cols, classes, nr_by_table)
             called = {m.lower() for m in _CALL_RE.findall(sql)} - registered
             register_udfs(spark, called)
             registered |= called

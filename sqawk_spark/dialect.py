@@ -8,16 +8,16 @@ of it is valid Spark SQL too; the gaps this module closes:
 - infix ``GLOB``: ``X GLOB Y`` / ``X NOT GLOB Y`` is SQLite-only
   syntax (equivalent to ``glob(Y, X)``, which we register as a UDF in
   functions/__init__.py). Rewritten to the function form.
-- two-argument ``group_concat(X, SEP)``: Spark UDF registration is
-  fixed-arity, so the one-arg form is registered as ``group_concat``
-  and the two-arg form as ``group_concat2``; this rewrite maps call
-  sites with two top-level arguments onto the latter.
+- SQLite's aggregates ``group_concat`` (every form) and ``total``:
+  lowered onto JVM aggregates — ``listagg``/ordered ``collect_list``
+  sorted by the scan keys (lower_group_concat) and
+  ``coalesce(sum(...), 0.0)`` (rewrite_affinity_aggregates).
 - double-quoted identifiers: SQLite resolves ``"name"`` as a column
   when it exists, else a string literal (quirks.html#dblquote, relied
   on by reference test header-1.2); with the loaded schemas in hand
   the same fallback is applied here.
 
-Both rewrites are quote-aware (single/double/backtick quoting with
+The rewrites are quote-aware (single/double/backtick quoting with
 SQL '' escaping) and operate on token boundaries only. The GLOB
 operand grammar covers the practical cases — identifiers (dotted,
 backtick-quoted), literals, function calls, and parenthesized
@@ -224,10 +224,8 @@ def _in_quotes(s: str, pos: int) -> bool:
 _ALIAS_RES = (
     # SQLite 3.44 string_agg(X, SEP) is group_concat's two-arg form
     # under the PostgreSQL name; 3.38 format() is printf() verbatim
-    # (lang_corefunc.html). Both lower to the names the engine
-    # registers; string_agg keeps its mandatory separator so it maps
-    # onto the two-arg path directly.
-    (re.compile(r"\bstring_agg\s*\(", re.IGNORECASE), "group_concat2("),
+    # (lang_corefunc.html). Both lower to the canonical names.
+    (re.compile(r"\bstring_agg\s*\(", re.IGNORECASE), "group_concat("),
     (re.compile(r"\bformat\s*\(", re.IGNORECASE), "printf("),
 )
 
@@ -251,13 +249,6 @@ def rewrite_function_aliases(stmt: str) -> str:
 
 
 _GC_RE = re.compile(r"\bgroup_concat\s*\(", re.IGNORECASE)
-
-
-_GC_CALL_RE = re.compile(
-    r"\b(group_concat|string_agg)\s*\(", re.IGNORECASE
-)
-
-
 _GC_DISTINCT_RE = re.compile(r"^\s*distinct\s+", re.IGNORECASE)
 
 
@@ -314,112 +305,9 @@ def rewrite_values_clause(stmt: str) -> str:
         stmt = stmt[: m.start()] + " " + repl + " " + stmt[close:]
 
 
-def rewrite_group_concat_distinct(stmt: str) -> str:
-    """``group_concat(DISTINCT X [COLLATE NOCASE])`` → the dedicated
-    first-arrival distinct UDAFs (functions/__init__.py) — Spark's
-    DISTINCT clause rejects Python UDAFs, and the COLLATE form dedups
-    by the ASCII fold while rendering the original case.  Runs before
-    strip_group_concat_collate so the collated form isn't stripped to
-    the binary-distinct one.  Multi-argument DISTINCT keeps Spark's
-    loud error (SQLite errors too)."""
-    while True:
-        edited = False
-        for m in _GC_CALL_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
-            args = _split_call_args(stmt, m.end() - 1)
-            if not args or len(args) != 1:
-                continue
-            dm = _GC_DISTINCT_RE.match(args[0])
-            if dm is None:
-                continue
-            core = args[0][dm.end() :].strip()
-            tm = _TRAILING_COLLATE_RE.match(core)
-            if tm and tm.group(1).count("(") == tm.group(1).count(")"):
-                fn = "group_concat_distinct_nocase"
-                core = tm.group(1).strip()
-            else:
-                fn = "group_concat_distinct"
-            stmt = stmt[: m.start()] + f"{fn}({core})" + stmt[close:]
-            edited = True
-            break
-        if not edited:
-            return stmt
-
-
-def strip_group_concat_collate(stmt: str) -> str:
-    """Trailing ``COLLATE NOCASE`` on a group_concat/string_agg
-    payload is a no-op (the collation names a comparison sequence,
-    not a value transform) — strip it BEFORE the group_concat
-    lowering embeds the token in engine SQL Spark can't parse."""
-    if not _COLLATE_NOCASE_RE.search(stmt):
-        return stmt
-    while True:
-        edited = False
-        for m in _GC_CALL_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
-            args = _split_call_args(stmt, m.end() - 1)
-            if not args:
-                continue
-            tm = _TRAILING_COLLATE_RE.match(args[0].strip())
-            if tm is None or tm.group(1).count("(") != tm.group(1).count(")"):
-                continue
-            new0 = tm.group(1).strip()
-            rest = ", ".join(a.strip() for a in args[1:])
-            repl = (
-                f"{m.group(1)}({new0}{', ' + rest if rest else ''})"
-            )
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-            edited = True
-            break
-        if not edited:
-            return stmt
-
-
-def rewrite_group_concat(stmt: str) -> str:
-    """Two-argument ``group_concat(X, SEP)`` → ``group_concat2(X,
-    SEP)`` (fixed-arity UDF registration; SQLite overloads the name)."""
-    out = []
-    last = 0
-    for m in _GC_RE.finditer(stmt):
-        if _in_quotes(stmt, m.start()):
-            continue
-        if m.start() > 0 and _IDENT.match(stmt[m.start() - 1]):
-            continue  # suffix of a longer identifier
-        open_paren = m.end() - 1
-        close = _match_paren_fwd(stmt, open_paren)
-        # count top-level commas inside the call
-        depth = 0
-        commas = 0
-        i = open_paren
-        while i < close:
-            c = stmt[i]
-            if c in "'\"`":
-                i = _scan_string(stmt, i)
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 1:
-                commas += 1
-            i += 1
-        if commas == 1:
-            out.append(stmt[last : m.start()])
-            out.append("group_concat2(")
-            last = m.end()
-    out.append(stmt[last:])
-    return "".join(out)
-
-
 _MINMAX_AGG_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
 _OTHER_AGG_RE = re.compile(
-    r"\b(?:count|sum|avg|total|group_concat"
-    r"|group_concat2|group_concat_distinct(?:_nocase)?)\s*\(",
-    re.IGNORECASE,
+    r"\b(?:count|sum|avg|total|group_concat)\s*\(", re.IGNORECASE
 )
 _OVER_RE = re.compile(r"\bover\b", re.IGNORECASE)
 _SELECT_RE = re.compile(r"\bselect\b", re.IGNORECASE)
@@ -1844,6 +1732,10 @@ def rewrite_collate_positions(
                     f"count(distinct "
                     f"{_fold_any(f'CAST(({core}) AS STRING)')})"
                 )
+            elif fn == "group_concat" and prefix == "distinct":
+                # the dedup compares under the collation, the values
+                # render as stored: lower_group_concat reads the marker
+                repl = f"group_concat(DISTINCT {_collate_wrap(core, kind)}{rest})"
             else:
                 # numeric aggregates / concat payloads: the collation
                 # names a comparison sequence, a no-op for the value
@@ -2289,10 +2181,10 @@ def rewrite_filter_clause(stmt: str) -> str:
     arg END)`` (SQLite ≥ 3.30 surface, ``lib/classes/sqawk.tcl:216``
     verbatim eval).
 
-    Spark parses FILTER natively for JVM aggregates but rejects it on
-    Python UDAFs (the SQLite names ``total``/``group_concat2`` are
-    registered that way) and on window functions — both of which
-    SQLite allows. The CASE lowering is exact for every SQLite
+    Spark parses FILTER natively for plain aggregate calls but not on
+    the lowered forms of the SQLite-only aggregates (``total``,
+    ``group_concat``) nor on window functions — both of which SQLite
+    allows. The CASE lowering is exact for every SQLite
     aggregate because they all ignore NULL inputs: a row failing the
     condition becomes a NULL argument, which the aggregate skips —
     including ``count(*)`` (→ ``count(CASE ...1 END)``), DISTINCT
@@ -2340,15 +2232,13 @@ def rewrite_filter_clause(stmt: str) -> str:
             distinct, head = "DISTINCT ", head[dm.end() :].strip()
         if head == "*":
             head = "1"
-        elif fn.lower() in ("group_concat", "group_concat2"):
-            # SQLite renders every group_concat argument as TEXT; the
-            # CASE lowering introduces NULLs, and a nullable integer
-            # column reaches the Arrow-batched UDAF as float64 (ints
-            # would print "-1.0"). Stringify JVM-side BEFORE the NULL
-            # appears so the UDAF receives SQLite's own text forms.
-            head = f"CAST({head} AS STRING)"
+        # a trailing COLLATE stays on the argument, outside the CASE
+        cm = re.match(r"(.*?)(\s+collate\s+\w+)$", head, re.I | re.S)
+        coll = ""
+        if cm and cm.group(1).count("(") == cm.group(1).count(")"):
+            head, coll = cm.group(1), cm.group(2)
         new_args = ", ".join(
-            [f"{distinct}CASE WHEN {cond} THEN {head} END"] + rest
+            [f"{distinct}CASE WHEN {cond} THEN {head} END{coll}"] + rest
         )
         stmt = (
             stmt[:call_start]
@@ -2559,7 +2449,6 @@ def rewrite_regex_calls(stmt: str) -> str:
 _OVER_RE = re.compile(r"\bover\s*\(", re.IGNORECASE)
 _GROUPS_KW_RE = re.compile(r"\bgroups\b", re.IGNORECASE)
 _ORDER_BY_RE = re.compile(r"\border\s+by\b", re.IGNORECASE)
-_FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
 
 # Top-level clause keywords, tried in order at each identifier start.
 # ``order by`` inside window specs sits at paren depth > 0, so the
@@ -2723,7 +2612,7 @@ def _rewrite_excluded_agg(
 
     group_concat (1-arg, or 2-arg with a literal separator) uses the
     same directional decomposition: the post-EXCLUDE frame is a union
-    of contiguous runs, each run concatenated by the same UDAF over
+    of contiguous runs, each run concatenated by the same call over
     its sub-frame (identical rendering/NULL-skip), and the runs joined
     with the separator — exact up to tie order, which SQLite leaves
     unspecified too.
@@ -2757,19 +2646,18 @@ def _rewrite_excluded_agg(
         return None
     fn = fn_m.group(1).lower()
     if fn not in (
-        "sum", "count", "avg", "total", "min", "max",
-        "group_concat", "group_concat2",
+        "sum", "count", "avg", "total", "min", "max", "group_concat",
     ):
         return None
     fn_open = fn_start + fn_m.end() - 1
     args = _split_call_args(stmt, fn_open)
     if args is None:
         return None
-    if fn == "group_concat2":
-        # two-arg form (the arity rewrite ran first); SQLite's per-row
-        # separator semantics only compose across sub-frames when the
-        # separator is one literal — otherwise keep the loud error
-        if len(args) != 2 or _sql_literal_text(args[1]) is None:
+    if fn == "group_concat" and len(args) == 2:
+        # SQLite's per-row separator semantics only compose across
+        # sub-frames when the separator is one literal — otherwise
+        # keep the loud error
+        if _sql_literal_text(args[1]) is None:
             return None
     elif len(args) != 1:
         return None
@@ -2801,70 +2689,25 @@ def _rewrite_excluded_agg(
     s_self = f"sum({arg}) over ({w_self})"
     row_val = f"coalesce({s_self}, 0)"
 
-    if fn in ("min", "max"):
+    if fn in ("min", "max", "group_concat"):
+        # the post-EXCLUDE frame is a union of contiguous runs —
+        # preceding groups, (self / peers-minus-self), following
+        # groups — each a sub-frame over which the same call runs.
+        # min/max combine the runs with NULL-skipping least/greatest;
+        # group_concat is order-sensitive, so it keeps the runs in
+        # frame order and joins them with the separator (among rows
+        # tied on the window ORDER BY, concatenation order is
+        # unspecified in both engines; with distinct keys the result
+        # is exact — fuzzed vs real SQLite in
+        # tests/test_groups_property.py).
         if not unit_gap:
             return None  # directional sub-frames need a unit gap
         b = _frame_bounds(frame_body)
         if b is None:
             return None
         s_off, e_off, b1, b2 = b
+        call = f"{fn}({', '.join(args)})"
         parts: list[str] = []
-        if s_off <= -1:
-            parts.append(
-                f"{fn}({arg}) over ({part}{ord_sql}"
-                f" {frame_kw} between {b1} and 1 preceding)"
-            )
-        if e_off >= 1:
-            parts.append(
-                f"{fn}({arg}) over ({part}{ord_sql}"
-                f" {frame_kw} between 1 following and {b2})"
-            )
-        if kind == "ties":
-            parts.append(f"({arg})")
-        elif kind == "current row" and not self_contig:
-            # peers minus self: rows before me ∪ rows after me inside
-            # the peer partition, under any order (min/max are
-            # direction-agnostic, so arbitrary tie order is fine)
-            peer_part = (
-                f"{partition.strip()}, {alias}"
-                if partition.strip()
-                else f"partition by {alias}"
-            )
-            for fr in (
-                "rows between unbounded preceding and 1 preceding",
-                "rows between 1 following and unbounded following",
-            ):
-                parts.append(
-                    f"{fn}({arg}) over ({peer_part}"
-                    f" order by {alias} {fr})"
-                )
-        comb = "least" if fn == "min" else "greatest"
-        if not parts:
-            repl = "null"  # frame was exactly the excluded group
-        elif len(parts) == 1:
-            repl = f"({parts[0]})"
-        else:
-            repl = f"{comb}({', '.join(parts)})"
-        return (fn_start, over_close, repl)
-
-    if fn in ("group_concat", "group_concat2"):
-        # order-sensitive: decompose the post-EXCLUDE frame into its
-        # contiguous runs — preceding groups, (self / peers-minus-self),
-        # following groups — concatenate each run with the same UDAF
-        # over a sub-frame (identical value rendering and NULL-skip),
-        # and join the runs with the separator. Among rows tied on the
-        # window ORDER BY, concatenation order is unspecified in both
-        # engines; with distinct keys the result is exact (fuzzed vs
-        # real SQLite in tests/test_groups_property.py).
-        if not unit_gap:
-            return None  # directional sub-frames need a unit gap
-        b = _frame_bounds(frame_body)
-        if b is None:
-            return None
-        s_off, e_off, b1, b2 = b
-        sep_sql = args[1] if fn == "group_concat2" else "','"
-        call = f"{fn}({arg}, {args[1]})" if fn == "group_concat2" else f"{fn}({arg})"
-        parts = []
         if s_off <= -1:
             parts.append(
                 f"{call} over ({part}{ord_sql}"
@@ -2874,8 +2717,12 @@ def _rewrite_excluded_agg(
             parts.append(
                 f"{call} over ({part}{ord_sql}"
                 f" rows between current row and current row)"
+                if fn == "group_concat"
+                else f"({arg})"
             )
         elif kind == "current row" and not self_contig:
+            # peers minus self: rows before me ∪ rows after me inside
+            # the peer partition (any order among the tied peers)
             peer_part = (
                 f"{partition.strip()}, {alias}"
                 if partition.strip()
@@ -2885,24 +2732,25 @@ def _rewrite_excluded_agg(
                 "rows between unbounded preceding and 1 preceding",
                 "rows between 1 following and unbounded following",
             ):
-                parts.append(
-                    f"{call} over ({peer_part} order by {alias} {fr})"
-                )
+                parts.append(f"{call} over ({peer_part} order by {alias} {fr})")
         if e_off >= 1:
             parts.append(
                 f"{call} over ({part}{ord_sql}"
                 f" {frame_kw} between 1 following and {b2})"
             )
+        joined = ", ".join(parts)
         if not parts:
             repl = "null"  # frame was exactly the excluded group
         elif len(parts) == 1:
             repl = f"({parts[0]})"
-        else:
-            joined = ", ".join(parts)
+        elif fn == "group_concat":
+            sep_sql = args[1] if len(args) == 2 else "','"
             repl = (
                 f"(case when coalesce({joined}) is not null"
                 f" then concat_ws({sep_sql}, {joined}) end)"
             )
+        else:
+            repl = f"{'least' if fn == 'min' else 'greatest'}({joined})"
         return (fn_start, over_close, repl)
 
     if fn == "count":
@@ -5963,7 +5811,7 @@ def _collect_item_alias_classes(
     # loop from clobbering them).
     for item in span[2]:
         gm = re.match(
-            r"^\s*(min|max|count|group_concat(?:2|_distinct(?:_nocase)?)?"
+            r"^\s*(min|max|count|group_concat"
             r"|min_by|max_by)\s*\(",
             item,
             re.IGNORECASE,
@@ -5982,7 +5830,7 @@ def _collect_item_alias_classes(
         if fn == "count":
             extras[alias] = "long"
             continue
-        if fn.startswith("group_concat"):
+        if fn == "group_concat":
             extras[alias] = "text"
             continue
         arg = item[gm.end() : close - 1].strip()
@@ -6272,12 +6120,16 @@ def _aff_expr_textish(arg: str, classes: dict[str, str]) -> bool:
 
 
 def _aff_window_suffix(stmt: str, close: int) -> tuple[str, int] | None:
-    """(' over (...)' text, end index) when an OVER clause directly
-    follows the aggregate's close paren."""
-    m = re.match(r"\s*over\s*\(", stmt[close:], re.IGNORECASE)
+    """(' over (...)' or ' over name' text, end index) when an OVER
+    clause directly follows the aggregate's close paren."""
+    m = re.match(
+        r"\s*over\s*(?:\(|[A-Za-z_][A-Za-z_0-9]*)", stmt[close:], re.IGNORECASE
+    )
     if m is None:
         return None
-    wend = _match_paren_fwd(stmt, close + m.end() - 1)
+    wend = close + m.end()
+    if stmt[wend - 1] == "(":
+        wend = _match_paren_fwd(stmt, wend - 1)
     return stmt[close:wend], wend
 
 
@@ -6295,33 +6147,41 @@ def rewrite_affinity_aggregates(stmt: str, classes: dict[str, str]) -> str:
     - ``avg(x)``   → ``(sum(coerce(x)) / count(x))``; under OVER the
       clause is spliced onto both halves:
       ``(sum(coerce(x)) OVER w / count(x) OVER w)``
-    - ``total(x)`` → ``coalesce(sum(coerce(x)), 0.0)`` for EVERY
-      column class — replacing the Pandas GROUPED_AGG UDAF with a
-      partial-aggregating JVM expression (the UDAF remains the
-      fallback for unclassifiable arguments); under OVER the
-      coalesce wraps the windowed sum.
+    - ``total(x)`` → ``coalesce(sum(coerce(x)), 0.0)`` — the one
+      lowering of SQLite's ``total``, for every argument: classed
+      columns coerce by class, any other expression (or an empty
+      catalog) by the numeric prefix of its text rendering; under
+      OVER the coalesce wraps the windowed sum.
 
     A FILTER-lowered argument (``CASE WHEN cond THEN col END``)
     coerces the column in place, keeping the row filter — the
     ``agg(col) FILTER (WHERE ...)`` composition over classed columns.
 
-    DISTINCT arguments are left native: SQLite dedups the STORED
-    values before coercing ('1abc' and '1xyz' are distinct but both
-    coerce to 1.0), which argument-level coercion cannot express."""
-    if not classes:
-        return stmt
+    DISTINCT arguments of sum/avg are left native; ``total(DISTINCT
+    x)`` sums the distinct COERCED values.  Both differ from SQLite
+    only where distinct stored texts share a numeric prefix ('1abc'
+    and '1xyz' are distinct there but both coerce to 1.0)."""
     while True:
         edited = False
         for m in _AFF_SUMAGG_RE.finditer(stmt):
             if _in_quotes(stmt, m.start()):
                 continue
             fn = m.group(1).lower()
+            if not classes and fn != "total":
+                continue
             close = _match_paren_fwd(stmt, m.end() - 1)
             arg = stmt[m.end() : close - 1].strip()
-            if re.match(r"^(distinct|all)\s", arg, re.IGNORECASE):
-                continue
+            distinct = ""
+            dm = re.match(r"^(distinct|all)\s", arg, re.IGNORECASE)
+            if dm is not None:
+                if fn != "total":
+                    continue
+                if dm.group(1).lower() == "distinct":
+                    distinct = "DISTINCT "
+                arg = arg[dm.end() :].strip()
             fc = None
             generic = False
+            coerced = False
             if not _AFF_IDENT_RE.match(arg):
                 fc = _aff_filter_case_parts(arg)
                 if fc is not None and (
@@ -6337,9 +6197,7 @@ def rewrite_affinity_aggregates(stmt: str, classes: dict[str, str]) -> str:
                     # generically (trim + numeric-prefix parse of the
                     # canonical string rendering) when the expression
                     # can produce text-class values — and for total()
-                    # ALWAYS, replacing the Pandas UDAF (which Spark
-                    # refuses to mix with JVM aggregates) with a
-                    # partial-aggregating JVM sum
+                    # always
                     if fn != "total" and not _aff_expr_textish(
                         arg, classes
                     ):
@@ -6368,40 +6226,31 @@ def rewrite_affinity_aggregates(stmt: str, classes: dict[str, str]) -> str:
                         # spellings a SQLite script cannot contain):
                         # already coerced — rewrapping would erase the
                         # per-group INTEGER result class.  total()
-                        # must STILL lower to the JVM coalesce(sum)
-                        # form: the Pandas UDAF fallback cannot mix
-                        # with JVM aggregates in one aggregation
-                        # (fuzz seed 20240815 script 131:
+                        # still takes its coalesce(sum) form (fuzz
+                        # seed 20240815 script 131:
                         # ``total(p), sum(like(...))``)
-                        if fn == "total":
-                            win0 = _aff_window_suffix(stmt, close)
-                            end0 = win0[1] if win0 else close
-                            w0 = win0[0] if win0 else ""
-                            stmt = (
-                                stmt[: m.start()]
-                                + f"coalesce(sum({arg}){w0}, "
-                                f"CAST(0 AS DOUBLE))"
-                                + stmt[end0:]
-                            )
-                            edited = True
-                            break
-                        continue
+                        if fn != "total":
+                            continue
+                        coerced = True
                     generic = True
             col = fc[1] if fc else arg
-            if generic:
-                cls = None
-            else:
+            cls = None
+            if not generic:
                 cls = classes.get(col.split(".")[-1].lower())
                 if cls is None:
-                    continue
-                if fn in ("sum", "avg") and cls not in (
+                    if fn != "total":
+                        continue
+                    generic = True
+                elif fn in ("sum", "avg") and cls not in (
                     "dynamic",
                     "text",
                     "none",
                 ):
                     continue
             win = _aff_window_suffix(stmt, close)
-            if generic:
+            if coerced:
+                cv = arg
+            elif generic:
                 ch = _parse_arith_chain(arg, classes)
                 if ch is not None:
                     # arithmetic argument: coerce per OPERAND (the
@@ -6428,7 +6277,7 @@ def rewrite_affinity_aggregates(stmt: str, classes: dict[str, str]) -> str:
             elif fn == "avg":
                 repl = f"(sum({c}){w} / count({arg}){w})"
             else:  # total
-                repl = f"coalesce(sum({c}){w}, CAST(0 AS DOUBLE))"
+                repl = f"coalesce(sum({distinct}{c}){w}, CAST(0 AS DOUBLE))"
             stmt = stmt[: m.start()] + repl + stmt[end:]
             edited = True
             break
@@ -8509,12 +8358,13 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
 
 def rewrite_affinity_semantics(stmt: str, classes: dict[str, str]) -> str:
     """All SQLite storage-class passes, driven by the load-time column
-    catalog (affinity.COLUMN_CLASSES, snapshotted by the CLI); a no-op
-    when no affinity-typed tables are loaded."""
+    catalog (affinity.COLUMN_CLASSES, snapshotted by the CLI).  With
+    no affinity-typed tables loaded only the passes every statement
+    needs run: raw SQLite type names (TEXT/NUMERIC) translate and
+    ``total()`` takes its JVM lowering."""
     if not classes:
-        # raw SQLite type names (TEXT/NUMERIC) must always translate,
-        # even with no affinity-typed tables loaded
         stmt, _ = _rewrite_cast_select_items(stmt, classes)
+        stmt = rewrite_affinity_aggregates(stmt, classes)
         return rewrite_affinity_casts(stmt, classes)
     # item-class rendering per SELECT scope (derived tables innermost
     # first, set-op compounds per branch); scope aliases join the
@@ -8550,18 +8400,34 @@ _SCAN_AGG_RE = re.compile(
     r"\b(count|sum|avg|total|group_concat|string_agg)\s*\(",
     re.IGNORECASE,
 )
-_SCAN_JOIN_SPLIT_RE = re.compile(
-    r"\b(?:natural\s+)?(?:inner\s+|left\s+(?:outer\s+)?|cross\s+)?join\b",
+# what separates a FROM clause's sources: commas, JOIN keywords, and
+# the ON/USING conditions (which run to the next separator)
+_FROM_SEP_RE = re.compile(
+    r",|\b(?:natural\s+)?(?:inner\s+|(?:left|right|full)\s+(?:outer\s+)?"
+    r"|cross\s+)?join\b|\b(on|using)\b",
     re.IGNORECASE,
 )
 _SCAN_BAD_JOIN_RE = re.compile(
     r"\b(?:right|full)\s+(?:outer\s+)?join\b", re.IGNORECASE
 )
-_SCAN_TABLE_RE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9$]*)"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9$]*))?\s*$",
-    re.IGNORECASE,
-)
+
+
+def _from_sources(src: str) -> list[tuple[int, int]]:
+    """Spans of the table sources in FROM-clause text ``src``, in FROM
+    order: the pieces between depth-0 commas and JOIN keywords, each
+    without its ON/USING condition."""
+    spans = []
+    start, in_cond = 0, False
+    for m in _FROM_SEP_RE.finditer(src):
+        if _stmt_depth(src, m.start()) or _in_quotes(src, m.start()):
+            continue  # a derived table's own joins stay inside its span
+        if not in_cond and src[start : m.start()].strip():
+            spans.append((start, m.start()))
+        in_cond = m.group(1) is not None
+        start = m.end()
+    if not in_cond and src[start:].strip():
+        spans.append((start, len(src)))
+    return spans
 
 
 def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
@@ -8579,15 +8445,25 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
     already deterministic, and the distributed parquet output path
     never calls this (a global sort there would serialize the write).
 
+    A GROUP BY without ORDER BY gets its GROUP BY terms as the ORDER
+    BY: SQLite's GROUP BY sorter emits the groups in group-key order
+    (sqawk tables have no index to group through).
+
     Bails — keeping today's unpinned order — on shapes whose SQLite
     loop order is not statically left-to-right or whose result rows
-    do not map 1:1 to scans: set ops, DISTINCT, GROUP BY/HAVING,
-    aggregates, RIGHT/FULL joins, derived tables, or a table without
-    its ``<prefix>nr`` counter."""
+    do not map 1:1 to scans: set ops, DISTINCT, HAVING, aggregates,
+    RIGHT/FULL joins, derived tables, or a table without its
+    ``<prefix>nr`` counter."""
     if _setop_cuts(stmt):
         return stmt
     clauses = _top_level_clauses(stmt)
     names = [c[0] for c in clauses]
+    distinct = re.match(r"\s*select\s+distinct\b", stmt, re.IGNORECASE)
+    if "group_by" in names and "order_by" not in names and not distinct:
+        g = clauses[names.index("group_by")]
+        after = [c for c in clauses if c[1] > g[2]]
+        terms = stmt[g[2] : after[0][1] if after else len(stmt)].strip()
+        return _add_order_keys(stmt, clauses, names, terms)
     if "from" not in names or "group_by" in names or "having" in names:
         return stmt
     span = _select_items_span(stmt)
@@ -8609,30 +8485,17 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
     from_end = (
         clauses[fi + 1][1] if fi + 1 < len(clauses) else len(stmt)
     )
-    src = stmt[clauses[fi][2] : from_end]
-    if _SCAN_BAD_JOIN_RE.search(src):
+    if _SCAN_BAD_JOIN_RE.search(stmt[clauses[fi][2] : from_end]):
         return stmt
-    refs: list[tuple[str, str]] = []  # (table, visible name)
-    for unit in _split_args_top(src):
-        for seg in _SCAN_JOIN_SPLIT_RE.split(unit):
-            body = re.split(
-                r"\b(?:on|using)\b", seg, maxsplit=1, flags=re.IGNORECASE
-            )[0]
-            if not body.strip():
-                continue
-            tm = _SCAN_TABLE_RE.match(body)
-            if tm is None or (tm.group(2) or "").lower() in _NOT_ALIAS:
-                return stmt  # derived table / unparsed shape
-            refs.append((tm.group(1), tm.group(2) or tm.group(1)))
-    if len(refs) < 2:
-        return stmt
-    keys = []
-    for table, ref in refs:
-        nr = nr_by_table.get(table.lower())
-        if nr is None:
-            return stmt
-        keys.append(f"{ref}.{nr}")
-    key_sql = ", ".join(keys)
+    got = _scan_keys(stmt, nr_by_table)
+    if got is None or len(got[1]) < 2:
+        return stmt  # derived table / table without a counter
+    return _add_order_keys(stmt, clauses, names, ", ".join(got[1]))
+
+
+def _add_order_keys(stmt, clauses, names, key_sql: str) -> str:
+    """``stmt`` with ``key_sql`` appended to its ORDER BY, or as a new
+    ORDER BY ahead of its LIMIT."""
     if "order_by" in names:
         ob = clauses[names.index("order_by")]
         after = [c for c in clauses if c[1] > ob[2]]
@@ -8648,13 +8511,204 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
     return out + (" " + tail if tail else "")
 
 
+# --- SQLite's group_concat on JVM aggregates ------------------------------
+
+# a source's projected arrival order (_scan_keys): _sqawk_scan<n>
+_SCAN_WRAP = "monotonically_increasing_id() AS _sqawk_scan"
+_SCAN_WRAP_RE = re.compile(r"\(select \*, " + re.escape(_SCAN_WRAP) + r"(\d+) ")
+
+
+def _select_scope(stmt: str, pos: int) -> tuple[int, int]:
+    """Span of the SELECT whose own clauses hold ``pos``: the innermost
+    parenthesized ``select``/``with`` enclosing it (else the whole
+    statement), narrowed to its set-operation branch."""
+    start, end = 0, len(stmt)
+    for o, e in _paren_group_spans(stmt):  # outer groups first
+        if o < pos < e and re.match(r"\(\s*(?:select|with)\b", stmt[o:], re.I):
+            start, end = o + 1, e - 1
+    for a, b in _setop_cuts(stmt[start:end]):
+        if start + a > pos:
+            return start, start + a
+        start = start + b
+    return start, end
+
+
+def _scan_keys(
+    scope: str, scan_keys: dict[str, str], n: int | None = None
+) -> tuple[str, list[str]] | None:
+    """(scope text, scan-key SQL list) for the SELECT text ``scope``:
+    one key per FROM source, in FROM order — SQLite's nested-loop
+    order.  A loaded table's key is its ``<prefix>nr`` counter (from
+    ``scan_keys``, table → column).  Any other source (derived table,
+    view, table without a counter) is wrapped to project its arrival
+    order as ``_sqawk_scan<n>`` — Spark rejects the nondeterministic
+    ``monotonically_increasing_id()`` inside an aggregate's argument —
+    and a wrapped source keeps its key on the next call.  None when a
+    source does not parse, or needs a wrap and ``n`` is None."""
+    clauses = _top_level_clauses(scope)
+    names = [c[0] for c in clauses]
+    if "from" not in names:
+        return scope, []
+    fi = names.index("from")
+    src_start = clauses[fi][2]
+    src_end = clauses[fi + 1][1] if fi + 1 < len(clauses) else len(scope)
+    src = scope[src_start:src_end]
+    keys: list[str] = []
+    edits: list[tuple[int, int, str]] = []
+    for a, b in _from_sources(src):
+        text = src[a:b].strip()
+        a = src.index(text, a)
+        wm = _SCAN_WRAP_RE.match(text)
+        tm = _SIMPLE_FROM_RE.match(text)
+        if wm is not None:
+            keys.append(f"_sqawk_scan{wm.group(1)}")
+            continue
+        plain = tm is not None and (tm.group(2) or "").lower() not in _NOT_ALIAS
+        ref = (tm.group(2) or tm.group(1)) if plain else ""
+        if plain and tm.group(1).lower() in scan_keys:
+            keys.append(f"{ref}.{scan_keys[tm.group(1).lower()]}")
+            continue
+        if n is None:
+            return None
+        if plain:
+            # a plain source keeps its visible name as the alias
+            end, body, alias = a + len(text), tm.group(1), f" {ref}"
+        elif text.startswith("("):
+            end = _match_paren_fwd(src, a)
+            body, alias = src[a:end], ""
+        else:
+            return None
+        keys.append(f"_sqawk_scan{n}")
+        edits.append((a, end, f"(select *, {_SCAN_WRAP}{n} from {body}){alias}"))
+        n += 1
+    for a, b, repl in reversed(edits):
+        src = src[:a] + repl + src[b:]
+    return scope[:src_start] + src + scope[src_end:], keys
+
+
+def _group_concat_sql(
+    args: list[str], keys: list[str] | None, window: str
+) -> str | None:
+    """Spark SQL for ``group_concat(args)`` (``window``: the call's OVER
+    clause, or ''), or None for shapes SQLite rejects too (DISTINCT
+    with a separator or a window).
+
+    Values render as TEXT, NULLs are skipped, no value gives NULL.
+    An aggregate concatenates in scan-key order (``keys``; unordered
+    when None) — never in the order Spark merges its buffers — and a
+    window in frame order.  A literal separator rides ``listagg``;
+    every other shape collects ``(keys, v, sep)`` structs, sorts them
+    and folds them in order:
+
+    - DISTINCT keeps each value's first occurrence (array_distinct);
+      under COLLATE NOCASE/RTRIM (the marker rewrite_collate_positions
+      leaves) the first occurrence of each folded value, as stored;
+    - a non-literal separator is read per row: each value after the
+      first is preceded by its OWN row's separator (NULL → '')."""
+    from sqawk_spark.affinity import _let
+
+    v = args[0]
+    dm = _GC_DISTINCT_RE.match(v)
+    if len(args) > 2 or (dm and (len(args) != 1 or window)):
+        return None
+    v, fold = _unwrap_nocase(v[dm.end() :]) if dm else (v, False)
+    sep = args[1] if len(args) == 2 else "','"
+    literal = _sql_literal_text(sep) is not None
+    if literal and not dm and not window:
+        order = f" WITHIN GROUP (ORDER BY {', '.join(keys)})" if keys else ""
+        return f"listagg(CAST({v} AS STRING), {sep}){order}"
+    fields = [f"'k{i}', {k}" for i, k in enumerate(keys or [])]
+    fields.append(f"'v', CAST({v} AS STRING)")
+    if not literal:
+        fields.append(f"'s', CAST({sep} AS STRING)")
+    rows = f"collect_list(named_struct({', '.join(fields)})){window}"
+    if keys:
+        rows = f"array_sort({rows})"
+    vals = "transform(g.l, e -> e.v)"
+    if not literal:
+        vals = (
+            "transform(g.l, (e, i) -> "
+            "IF(i = 0, e.v, concat(coalesce(e.s, ''), e.v)))"
+        )
+        sep = "''"
+    elif fold:
+        # first occurrence per folded value: sort by (fold, position),
+        # keep each fold's head, restore position order
+        f = "rtrim(e.v)" if fold == "rtrim" else _fold_sql("e.v")
+        firsts = _let(
+            {
+                "t": "array_sort(transform(g.l, (e, i) -> named_struct("
+                f"'f', {f}, 'i', i, 'v', e.v)))"
+            },
+            "h",
+            "filter(h.t, (e, j) -> j = 0 OR h.t[j - 1].f <> e.f)",
+        )
+        vals = (
+            "transform(array_sort(transform("
+            f"{firsts}, e -> named_struct('i', e.i, 'v', e.v))), e -> e.v)"
+        )
+    elif dm:
+        vals = f"array_distinct({vals})"
+    return _let(
+        {"l": f"filter({rows}, e -> e.v IS NOT NULL)"},
+        "g",
+        f"CASE WHEN size(g.l) > 0 THEN array_join({vals}, {sep}) END",
+    )
+
+
+def _first_group_concat(stmt: str) -> re.Match[str] | None:
+    return next(
+        (
+            m
+            for m in _GC_RE.finditer(stmt)
+            if not _in_quotes(stmt, m.start())
+            and not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
+        ),
+        None,
+    )
+
+
+def lower_group_concat(
+    stmt: str, scan_keys: dict[str, str] | None = None
+) -> str:
+    """Every SQLite ``group_concat`` call → its JVM form
+    (_group_concat_sql), first call first: an aggregate call orders by
+    its SELECT scope's scan keys (_scan_keys), a windowed call by its
+    frame.  A shape SQLite rejects too keeps its call, quoted so this
+    pass moves on, and Spark rejects it loudly."""
+    while (m := _first_group_concat(stmt)) is not None:
+        win = _aff_window_suffix(stmt, _match_paren_fwd(stmt, m.end() - 1))
+        keys = None
+        if win is None:
+            start, end = _select_scope(stmt, m.start())
+            got = _scan_keys(stmt[start:end], scan_keys or {}, stmt.count(_SCAN_WRAP))
+            if got is not None:
+                stmt = stmt[:start] + got[0] + stmt[end:]
+                keys = got[1]
+                # a FROM edit adds no call: the first call is the same
+                m = _first_group_concat(stmt)
+        args = _split_call_args(stmt, m.end() - 1)
+        repl = args and _group_concat_sql(args, keys, win[0] if win else "")
+        if not repl:
+            stmt = stmt[: m.start()] + "`group_concat`" + stmt[m.end() - 1 :]
+            continue
+        end = win[1] if win else _match_paren_fwd(stmt, m.end() - 1)
+        stmt = stmt[: m.start()] + repl + stmt[end:]
+    return stmt
+
+
 def rewrite_statement(
     stmt: str,
     columns: set[str] | None = None,
     classes: dict[str, str] | None = None,
+    scan_keys: dict[str, str] | None = None,
 ) -> str:
-    # aliases first so every later pass sees canonical names (e.g.
-    # string_agg FILTER (...) must hit the group_concat CAST path)
+    """``stmt`` in SQLite's dialect → Spark SQL with SQLite's answers.
+    ``columns``: the loaded column names (double-quote fallback);
+    ``classes``: their storage classes (affinity.COLUMN_CLASSES);
+    ``scan_keys``: each loaded table's row-counter column, which
+    orders group_concat (lower_group_concat)."""
+    # aliases first so every later pass sees canonical names
     stmt = rewrite_function_aliases(stmt)
     # explicit COLLATE BINARY names the default collation — a no-op
     # on sqawk tables (no declared column collations), stripped so
@@ -8673,7 +8727,7 @@ def rewrite_statement(
         stmt = stmt[: bm.start()] + stmt[bm.end() :]
     stmt = rewrite_values_clause(stmt)
     # FILTER next: the CASE lowering produces plain aggregate calls
-    # the later passes (group_concat arity, GROUPS frames) then see
+    # the later passes (GROUPS frames, group_concat) then see
     stmt = rewrite_filter_clause(stmt)
     # predicates in VALUE positions become SQLite's 0/1 integers while
     # the statement is still user SQL (sum(a1 > 0), (a1 > 0) + 1); the
@@ -8682,9 +8736,7 @@ def rewrite_statement(
     stmt = rewrite_predicate_values(stmt, classes or {})
     # glob next: infix GLOB lowers to glob() calls, which the regex-
     # call pass can then lift onto RLIKE when the pattern is literal
-    stmt = rewrite_group_concat_distinct(stmt)
-    stmt = strip_group_concat_collate(stmt)
-    stmt = rewrite_group_concat(rewrite_regex_calls(rewrite_glob(stmt)))
+    stmt = rewrite_regex_calls(rewrite_glob(stmt))
     stmt = rewrite_hint_funcs(stmt)
     stmt = rewrite_scalar_minmax(rewrite_two_arg_trim(stmt))
     # user-SQL-only scalar exactness: SQLite's ASCII-only case fold,
@@ -8747,6 +8799,10 @@ def rewrite_statement(
     stmt = rewrite_boolean_select_items(stmt, classes or {})
     stmt = rewrite_boolean_clause_terms(stmt, classes or {})
     stmt = rewrite_boolean_contexts(stmt, classes or {})
+    # group_concat after every pass that reads its call (aggregate
+    # detection, item classes, window decomposition) and before the
+    # NOCASE markers go: a DISTINCT payload's marker names its dedup
+    stmt = lower_group_concat(stmt, scan_keys)
     # last: any NOCASE marker no class-aware pass claimed lowers to
     # the literal ASCII fold
     return _strip_nocase(stmt)

@@ -8,14 +8,13 @@ The Tcl-list functions (lindex, llength, lrange, dict_get,
 dict_exists) genuinely need Tcl quoting rules → Python UDFs, defined
 as closures over a vendored tokenizer so executors never import this
 package. They're interop helpers for small-side data, not the bulk
-path.
+path. SQLite's own aggregates (``total``, ``group_concat``) are not
+here: the dialect lowers them onto JVM aggregates.
 """
 
 from __future__ import annotations
 
 from collections.abc import Collection
-
-import pandas as pd  # module-scope: pandas_udf type hints resolve here
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -670,84 +669,7 @@ def register_udfs(
             """
         )
 
-    # SQLite aggregate names: total() (sum with 0.0 for empty/all-NULL)
-    # and group_concat() — Arrow-batched grouped-agg UDFs. Caveat
-    # (shared with any GROUPED_AGG pandas UDF): they cannot be mixed
-    # with JVM aggregates in one SELECT, and have no partial
-    # aggregation — fine for sqawk-sized scripts; at scale use
-    # coalesce(sum(x),0.0) / concat_ws(',', collect_list(x)).
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.DoubleType())
-    def total_agg(v: pd.Series) -> float:
-        # SQLite numeric coercion, not a hard cast: text sums its
-        # numeric PREFIX ('3abc' → 3.0) and counts 0.0 otherwise —
-        # astype(float64) would raise on any non-numeric string.
-        # (The dialect lowers total() over classified columns onto a
-        # JVM sum — this UDAF is the unclassifiable-argument fallback.)
-        s = v.dropna()
-        ex = s.astype(str).str.strip().str.extract(
-            r"^([+-]?(?:[0-9]+\.?[0-9]*(?:[eE][+-]?[0-9]+)?"
-            r"|\.[0-9]+(?:[eE][+-]?[0-9]+)?))",
-            expand=False,
-        )
-        return float(pd.to_numeric(ex, errors="coerce").fillna(0.0).sum())
-
-    @pandas_udf(T.StringType())
-    def group_concat_agg(v: pd.Series) -> str | None:
-        vals = [str(x) for x in v.dropna()]
-        return ",".join(vals) if vals else None
-
-    @pandas_udf(T.StringType())
-    def group_concat2_agg(v: pd.Series, sep: pd.Series) -> str | None:
-        """group_concat(X, Y): SQLite emits Y from the CURRENT row as
-        the separator preceding each value after the first. Reached via
-        the dialect rewrite (dialect.py) since one UDF name cannot
-        carry two arities in Spark."""
-        mask = v.notna()
-        vals = [str(x) for x in v[mask]]
-        seps = ["" if x is None else str(x) for x in sep[mask]]
-        if not vals:
-            return None
-        return vals[0] + "".join(
-            seps[i] + vals[i] for i in range(1, len(vals))
-        )
-
-    _ASCII_FOLD = str.maketrans(
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-    )
-
-    @pandas_udf(T.StringType())
-    def group_concat_distinct_agg(v: pd.Series) -> str | None:
-        """group_concat(DISTINCT X): SQLite dedups by value keeping
-        the FIRST-arrival representative in scan order, ',' separator
-        (lang_aggfunc.html; the dialect routes the DISTINCT form here
-        — Spark's own DISTINCT clause rejects Python UDAFs)."""
-        seen: set[str] = set()
-        out = []
-        for x in v.dropna():
-            s = str(x)
-            if s not in seen:
-                seen.add(s)
-                out.append(s)
-        return ",".join(out) if out else None
-
-    @pandas_udf(T.StringType())
-    def group_concat_distinct_nocase_agg(v: pd.Series) -> str | None:
-        """group_concat(DISTINCT X COLLATE NOCASE): dedup by SQLite's
-        ASCII-only case fold, first-arrival representative rendered
-        with its ORIGINAL case (probed vs sqlite3: 'AB,Ba,zz')."""
-        seen: set[str] = set()
-        out = []
-        for x in v.dropna():
-            s = str(x)
-            k = s.translate(_ASCII_FOLD)
-            if k not in seen:
-                seen.add(k)
-                out.append(s)
-        return ",".join(out) if out else None
-
-    def udf(fn, return_type=None):
+    def udf(fn, return_type):
         return lambda name: spark.udf.register(name, fn, return_type)
 
     registrations = {
@@ -756,11 +678,6 @@ def register_udfs(
         "unicode": udf(unicode_fn, T.IntegerType()),
         "sqlite_version": udf(sqlite_version, T.StringType()),
         "iif": iif,
-        "total": udf(total_agg),
-        "group_concat": udf(group_concat_agg),
-        "group_concat2": udf(group_concat2_agg),
-        "group_concat_distinct": udf(group_concat_distinct_agg),
-        "group_concat_distinct_nocase": udf(group_concat_distinct_nocase_agg),
         # CPython repr of a double — used by the dialect's sum()
         # rendering for dynamic columns (the REAL branch of SQLite's
         # per-group INTEGER/REAL sum type). Row-at-a-time is fine: it

@@ -1380,8 +1380,8 @@ def test_infix_glob(tmp_path):
 
 
 def test_group_concat_two_arg(tmp_path):
-    """group_concat(X, SEP) — 2-arg SQLite form via the dialect
-    rewrite onto the fixed-arity group_concat2 UDF."""
+    """group_concat(X, SEP) — 2-arg SQLite form, lowered by the
+    dialect onto listagg with the literal separator."""
     f = write(tmp_path, "f", "x 1\nx 2\ny 3\n")
     got = pysqawk(
         "select a1, group_concat(a2, '-') as g from a group by a1 order by a1",
@@ -1409,8 +1409,8 @@ def test_format_alias(tmp_path):
 
 
 def test_string_agg_filter_clause(tmp_path):
-    """string_agg must reach the group_concat FILTER lowering (the
-    CAST-to-text path), not a bare CASE that floats integers."""
+    """string_agg must reach the group_concat FILTER lowering and
+    render the filtered integers as text, not as floats."""
     f = write(tmp_path, "f", "x 1\nx 2\nx 3\n")
     got = pysqawk(
         "select string_agg(a2, ',') filter (where a2 > 1) as g from a",

@@ -11,17 +11,17 @@ import pytest
 
 from sqawk_spark.dialect import (
     glob_to_regex,
+    lower_group_concat,
     rewrite_glob,
-    rewrite_group_concat,
     rewrite_regex_calls,
     rewrite_statement,
 )
 
 
 def _lower_only(stmt: str) -> str:
-    """The GLOB/group_concat lowering passes without the JVM regex-call
-    lift — what rewrite_statement did before the RLIKE fast path."""
-    return rewrite_group_concat(rewrite_glob(stmt))
+    """The GLOB and group_concat lowering passes without the JVM
+    regex-call lift, over a table ``a`` whose row counter is ``anr``."""
+    return lower_group_concat(rewrite_glob(stmt), {"a": "anr"})
 
 
 @pytest.mark.parametrize(
@@ -60,18 +60,23 @@ def _lower_only(stmt: str) -> str:
             "where a1 GLOB 'p' or a2 GLOB 'q'",
             "where glob('p', a1) or glob('q', a2)",
         ),
-        # group_concat arity dispatch
+        # group_concat → listagg in scan order, both arities
         (
             "select group_concat(a1) from a",
-            "select group_concat(a1) from a",
+            "select listagg(CAST(a1 AS STRING), ',')"
+            " WITHIN GROUP (ORDER BY a.anr) from a",
         ),
         (
             "select group_concat(a1, '-') from a",
-            "select group_concat2(a1, '-') from a",
+            "select listagg(CAST(a1 AS STRING), '-')"
+            " WITHIN GROUP (ORDER BY a.anr) from a",
         ),
         (
             "select group_concat(coalesce(a1, 'x'), ';'), group_concat(a2) from a",
-            "select group_concat2(coalesce(a1, 'x'), ';'), group_concat(a2) from a",
+            "select listagg(CAST(coalesce(a1, 'x') AS STRING), ';')"
+            " WITHIN GROUP (ORDER BY a.anr),"
+            " listagg(CAST(a2 AS STRING), ',')"
+            " WITHIN GROUP (ORDER BY a.anr) from a",
         ),
         (
             "select 'group_concat(a,b)' from a",
@@ -248,34 +253,27 @@ def test_glob_semantics_match_sqlite():
         assert got == want, p
 
 
-def test_group_concat_two_arg_semantics_match_sqlite():
+def test_group_concat_two_arg_semantics_match_sqlite(spark):
     """SQLite: separator precedes each value after the first and is
-    taken from the current row's second argument."""
+    taken from the current row's second argument (NULL → ''). The
+    lowered SQL must agree in Spark, in scan-key order even when the
+    rows reach Spark in another order."""
+    rows = [
+        (1, "a", "-", 1), (1, "b", "+", 2), (1, None, "*", 3),
+        (1, "c", "/", 4), (1, "d", None, 5), (2, None, "-", 6),
+        (3, "e", "-", 7),
+    ]
     con = sqlite3.connect(":memory:")
-    con.execute("create table t (g int, x text, s text)")
-    con.executemany(
-        "insert into t values (?, ?, ?)",
-        [(1, "a", "-"), (1, "b", "+"), (1, None, "*"), (1, "c", "/"),
-         (2, None, "-")],
-    )
-    want = {
-        g: v
-        for g, v in con.execute(
-            "select g, group_concat(x, s) from t group by g"
-        )
-    }
-    # mirror of functions/__init__.py group_concat2_agg logic
-    def py_group_concat2(pairs):
-        vals = [str(x) for x, _ in pairs if x is not None]
-        seps = [str(s) for x, s in pairs if x is not None]
-        if not vals:
-            return None
-        return vals[0] + "".join(
-            seps[i] + vals[i] for i in range(1, len(vals))
-        )
-
-    assert py_group_concat2([("a", "-"), ("b", "+"), (None, "*"), ("c", "/")]) == want[1]
-    assert py_group_concat2([(None, "-")]) == want[2]
+    con.execute("create table t (g int, x text, s text, tnr int)")
+    con.executemany("insert into t values (?, ?, ?, ?)", rows)
+    q = "select g, group_concat(x, s) from t group by g order by g"
+    want = con.execute(q).fetchall()
+    spark.createDataFrame(
+        rows[::-1], "g int, x string, s string, tnr int"
+    ).repartition(3).createOrReplaceTempView("t")
+    got = spark.sql(rewrite_statement(q, scan_keys={"t": "tnr"})).collect()
+    assert [tuple(r) for r in got] == want
+    assert want == [(1, "a+b/cd"), (2, None), (3, "e")]
 
 
 def test_date_call_lowering_matches_udf_and_sqlite(spark):
@@ -865,13 +863,26 @@ def test_append_scan_order_shapes():
         "select a1 from a join b on a1=b1 join c on a1=c1", nr
     )
     assert out.endswith("order by a.anr, b.bnr, c.cnr")
-    # bails: single table, aggregates, group by, distinct, set ops,
-    # derived tables, unknown counter
+    # GROUP BY without ORDER BY: SQLite's sorter emits the groups in
+    # group-key order, so the GROUP BY terms become the ORDER BY
+    # (ahead of a LIMIT)
+    assert append_scan_order(
+        "select a1 from a join b on a1=b1 group by a1", nr
+    ) == "select a1 from a join b on a1=b1 group by a1 order by a1"
+    assert append_scan_order(
+        "select a1, count(*) from a group by a1 having count(*) > 1 limit 3", nr
+    ) == (
+        "select a1, count(*) from a group by a1 having count(*) > 1"
+        " order by a1 limit 3"
+    )
+    # bails: single table, aggregates, grouped with ORDER BY or
+    # DISTINCT, distinct, set ops, derived tables, unknown counter
     for q in [
         "select a1 from a",
         "select count(*) from a join b on a1=b1",
         "select min(a1) from a join b on a1=b1",
-        "select a1 from a join b on a1=b1 group by a1",
+        "select a1, count(*) from a group by 1 order by 2",
+        "select distinct a1 from a group by a1, a2",
         "select distinct a1 from a join b on a1=b1",
         "select a1 from a union select b1 from b",
         "select a1 from (select a1 from a) join b on a1=b1",

@@ -25,15 +25,12 @@ def test_filter_rewrite_string_forms():
     assert r(
         "select count(distinct a1) filter (where a2>0) from a"
     ) == ("select count(DISTINCT CASE WHEN a2>0 THEN a1 END) from a")
-    # 2-arg group_concat: condition wraps the value (stringified
-    # JVM-side — SQLite renders group_concat args as TEXT, and the
-    # NULL-introducing CASE would otherwise float-coerce int columns
-    # in the Arrow batch), separator intact
+    # 2-arg group_concat: condition wraps the value, separator intact
+    # (the group_concat lowering renders the value as TEXT)
     assert r(
         "select group_concat(a1, ',') filter (where a2 > 1) from a"
     ) == (
-        "select group_concat(CASE WHEN a2 > 1 THEN "
-        "CAST(a1 AS STRING) END, ',') from a"
+        "select group_concat(CASE WHEN a2 > 1 THEN a1 END, ',') from a"
     )
     # window suffix survives after the replaced span
     assert r(
@@ -62,7 +59,7 @@ CONDS = ["k > 3", "p = 1", "v < 0", "k % 2 = 0", "v > 10 and k < 6"]
 
 
 def test_filter_clause_randomized_vs_sqlite(spark):
-    register_udfs(spark)  # total() / group_concat2() SQLite names
+    register_udfs(spark)  # any SQLite function the rewrite emits
     rng = random.Random(11)
     rows = [
         (rng.randint(0, 2), rng.randint(0, 8), rng.randint(-5, 50))

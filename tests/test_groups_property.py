@@ -49,10 +49,7 @@ def test_groups_frame_randomized_vs_sqlite(spark):
         assert got == want, f"{q}\nrewritten: {rewritten}"
 
 
-# total(v) tested separately: it only resolves where the EXCLUDE
-# rewrite replaces it with sum-based expressions (a bare
-# ``total(...) over`` window was never supported — Python UDAFs can't
-# run in window context)
+# total(v) is tested separately (test_groups_exclude_total_vs_sqlite)
 EX_FUNCS = ["sum(v)", "count(*)", "count(v)", "avg(v)"]
 EX_KINDS = ["exclude current row", "exclude group", "exclude ties",
             "exclude no others"]
@@ -195,7 +192,7 @@ def test_groups_exclude_group_concat_vs_sqlite(spark):
         ]
     from sqawk_spark.functions import register_udfs
 
-    register_udfs(spark)  # the rewrite emits group_concat UDAF calls
+    register_udfs(spark)  # any SQLite function the rewrite emits
     con = sqlite3.connect(":memory:")
     con.execute("create table tg (p int, k int, v text)")
     con.executemany("insert into tg values (?,?,?)", rows)
@@ -261,8 +258,8 @@ def test_groups_exclude_unsupported_still_bails():
         "select group_concat(v, s) over (order by k groups between"
         " 1 preceding and 1 following exclude group) from t"
     )
-    # the arity pass renames to group_concat2, but the GROUPS frame
-    # must survive unlowered so Spark still raises its parse error
+    # the GROUPS frame must survive unlowered so Spark still raises
+    # its parse error
     assert "groups between" in rewrite_statement(q)
 
 

@@ -1,7 +1,8 @@
-"""SQLite-valid statements the CLI still gets wrong, each compared with
-stdlib sqlite3 in sqawk's table layout and marked strict xfail: a fix
-turns its test into an XPASS failure, which is the cue to drop the
-marker and the README "Known divergences" entry together.
+"""SQLite-valid statements the CLI got or still gets wrong, each
+compared with stdlib sqlite3 in sqawk's table layout.  The ones still
+wrong are marked strict xfail: a fix turns its test into an XPASS
+failure, which is the cue to drop the marker and the README "Known
+divergences" entry together.
 """
 
 from __future__ import annotations
@@ -10,7 +11,6 @@ import io
 import sqlite3
 
 import pytest
-from pyspark.errors import AnalysisException
 
 import sqawk_spark.cli as cli
 from tests import sqlite_layout
@@ -38,14 +38,9 @@ def _compare(tmp_path, sql: str, tables: dict[str, str], ordered: bool):
 ROWS = "1 x\n2 y\n3 x\n"
 
 
-# group_concat and friends are pandas GROUPED_AGG UDFs, and Spark
-# will not put one in the same Aggregate as a JVM aggregate (raised
-# when the query is planned for execution)
-@pytest.mark.xfail(
-    strict=True,
-    raises=AnalysisException,
-    reason="INVALID_PANDAS_UDF_PLACEMENT",
-)
+# aggregate mixes that once failed: group_concat/total beside JVM
+# aggregates (INVALID_PANDAS_UDF_PLACEMENT), and the two-argument
+# group_concat beside max() (NESTED_AGGREGATE_FUNCTION)
 @pytest.mark.parametrize(
     "sql",
     [
@@ -58,10 +53,6 @@ def test_jvm_aggregate_with_group_concat(tmp_path, sql):
     _compare(tmp_path, sql, {"a": ROWS}, ordered=False)
 
 
-# the bare-column min/max rewrite wraps group_concat2 inside max_by
-@pytest.mark.xfail(
-    strict=True, raises=RuntimeError, reason="NESTED_AGGREGATE_FUNCTION"
-)
 def test_group_concat_separator_with_max(tmp_path):
     _compare(
         tmp_path,
@@ -83,4 +74,22 @@ def test_order_by_ties_follow_sqlite_join_order(tmp_path):
         " where b1 < 10000 order by b1",
         {"a": "h1 x\nh2 y\nh3 z\n", "b": "5 z\n5 y\n5 x\n9999999 q\n"},
         ordered=True,
+    )
+
+
+# the same join order decides group_concat's concatenation order: the
+# CLI concatenates in FROM-order nested-loop order, but for an
+# equi-join SQLite probes the inner table through an automatic
+# covering index, so each outer row's matches come in index-key order
+# (b1, b2: 'v0,v12,v4,v8'), not in b's record order
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason="join tie order")
+def test_group_concat_over_equi_join_follows_automatic_index(tmp_path):
+    _compare(
+        tmp_path,
+        "select a1, group_concat(b2) from a join b on a2 = b1 group by a1",
+        {
+            "a": "1 k0\n2 k1\n1 k1\n",
+            "b": "k0 v0\nk1 v1\nk0 v4\nk0 v8\nk0 v12\nk1 v5\n",
+        },
+        ordered=False,
     )
